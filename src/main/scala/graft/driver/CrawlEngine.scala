@@ -29,9 +29,17 @@ import graft.operators.{Politeness, Stages}
  * `hotHostSalts` url-salted buckets for promoted hot domains (see
  * CrawlConfig.hotHostSalts / promoteHotHosts) — and a cycle rewrites only
  * touched buckets.
- * Shuffles per cycle: drain window (by host), fetch join (by url), dedup
- * anti-join (by url) — ≤3 as designed (SURVEY §4.3). Logical clock = cycle
- * number; no wall-clock in executors.
+ * Plans are static: every call that runs crawl jobs runs with adaptive query
+ * execution off (see [[withStaticPlans]]); the engine itself picks the join
+ * strategy (expectedBatch vs broadcastBatchLimit), the write partition
+ * count (SnapTable) and the skew remedy (hot-host salting), and AQE's
+ * per-exchange query-stage jobs are pure overhead at micro-cycle sizes.
+ * Nothing coalesces shuffle partitions at runtime, so the session's
+ * `spark.sql.shuffle.partitions` should match its cores.
+ * Spark jobs per cycle, commit included: 18.5 averaged over the robots and
+ * the page cycle of the crawlbench `polite` workload (local[4]); 16, 19 and
+ * 18 over the three cycles of the `site3` fixture (StaticPlanSpec pins
+ * these). Logical clock = cycle number; no wall-clock in executors.
  */
 final class CrawlEngine(
     val spark: SparkSession,
@@ -96,6 +104,21 @@ final class CrawlEngine(
   private var recentItems: Long = 1L << 17
   private var recentCount: Long = 0L
   private val RedirectCodes = Seq(301, 302, 303, 307, 308)
+
+  /** Runs `f` with adaptive query execution off, then puts back the
+    * caller's setting — or unsets it when the caller never set it — even
+    * when `f` throws. The session conf is shared, so concurrent users of
+    * the session see the static setting while an engine call runs. */
+  private def withStaticPlans[T](f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getAll.get(key) // None: the caller never set it
+    spark.conf.set(key, "false")
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   /** Rebuild MAIN from the live frontier when it is absent or outgrown, or
     * when RECENT has outgrown its sizing (then RECENT also doubles). */
@@ -212,31 +235,33 @@ final class CrawlEngine(
       s"$workDir already holds crawl state (snapshot v${snap.latestVersion.get}); " +
         "use resume() or point at a fresh workdir")
     prepareCorpus()
-    val rows = seedsRaw
-      .select(call_function("graft_canonicalize", $"raw").as("url")).filter($"url".isNotNull)
-      .dropDuplicates("url")
-      .withColumn("host", call_function("graft_host", $"url"))
-      .withColumn("depth", lit(0))
-      .withColumn("prio", lit(0L))
-      .withColumn("status", lit(Status.New))
-      .withColumn("started", lit(-1L))
-      .withColumn("retries", lit(0))
-      .withColumn("reason", lit(null).cast("string"))
-      .withColumn("headers",
-        typedlit(Option(headers).getOrElse(config.defaultHeaders)))
-      .withColumn("bucket", bucketCol($"host", $"url"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val perBucket = rows.groupBy($"bucket").agg(count(lit(1))).collect()
-    val buckets = perBucket.map(_.getInt(0)).toSet
-    perBucket.foreach(r => bucketRowEst(r.getInt(0)) =
-      bucketRowEst.getOrElse(r.getInt(0), 0L) + r.getLong(1))
-    seenCountEstimate = perBucket.map(_.getLong(1)).sum
-    expectedBatch = seenCountEstimate
-    snap.commit(cycle = 0,
-      cowTables = Map("frontier" -> ((rows, "bucket", buckets))),
-      metrics = Map("seeded" -> seenCountEstimate.toDouble,
-        "num_buckets" -> config.numBuckets.toDouble))
-    rows.unpersist(): Unit
+    withStaticPlans {
+      val rows = seedsRaw
+        .select(call_function("graft_canonicalize", $"raw").as("url")).filter($"url".isNotNull)
+        .dropDuplicates("url")
+        .withColumn("host", call_function("graft_host", $"url"))
+        .withColumn("depth", lit(0))
+        .withColumn("prio", lit(0L))
+        .withColumn("status", lit(Status.New))
+        .withColumn("started", lit(-1L))
+        .withColumn("retries", lit(0))
+        .withColumn("reason", lit(null).cast("string"))
+        .withColumn("headers",
+          typedlit(Option(headers).getOrElse(config.defaultHeaders)))
+        .withColumn("bucket", bucketCol($"host", $"url"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val perBucket = rows.groupBy($"bucket").agg(count(lit(1))).collect()
+      val buckets = perBucket.map(_.getInt(0)).toSet
+      perBucket.foreach(r => bucketRowEst(r.getInt(0)) =
+        bucketRowEst.getOrElse(r.getInt(0), 0L) + r.getLong(1))
+      seenCountEstimate = perBucket.map(_.getLong(1)).sum
+      expectedBatch = seenCountEstimate
+      snap.commit(cycle = 0,
+        cowTables = Map("frontier" -> ((rows, "bucket", buckets))),
+        metrics = Map("seeded" -> seenCountEstimate.toDouble,
+          "num_buckets" -> config.numBuckets.toDouble))
+      rows.unpersist(): Unit
+    }
   }
 
   /**
@@ -274,7 +299,7 @@ final class CrawlEngine(
    * Master.scala:104-113) and commits unseen URLs as depth-0 New rows.
    * Returns the number of rows actually enqueued.
    */
-  def addSeeds(seeds: Seq[String], headers: Map[String, String] = null): Long = {
+  def addSeeds(seeds: Seq[String], headers: Map[String, String] = null): Long = withStaticPlans {
     val prev = snap.latest.getOrElse(sys.error("engine not initialized"))
     requireBucketCompat(prev)
     val frontier = loadFrontier(prev)
@@ -969,7 +994,7 @@ final class CrawlEngine(
    *
    * Returns (snapshot, last wave's progress, last wave's pending, waves run).
    */
-  def runGroup(startCycle: Long, maxWaves: Int): (Snapshot, Long, Long, Int) = {
+  def runGroup(startCycle: Long, maxWaves: Int): (Snapshot, Long, Long, Int) = withStaticPlans {
     val prev = snap.latest.getOrElse(sys.error("engine not initialized"))
     requireBucketCompat(prev)
     var frontier = loadFrontier(prev).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1084,16 +1109,21 @@ final class CrawlEngine(
 
   /** Drive micro-cycles over an already-seeded frontier until Finished,
     * committing every `config.wavesPerCommit` cycles (O10 batch loop). */
-  def drive(maxCycles: Int = 1000): Snapshot = {
-    var cycle = 1L
+  def drive(maxCycles: Int = 1000): Snapshot = cycles(1L, maxCycles)
+
+  /** The one cycle loop behind [[drive]] and [[resume]]: at most
+    * `maxCycles` logical cycles from `start`, in groups of
+    * `config.wavesPerCommit`, until Finished; returns the final snapshot. */
+  private def cycles(start: Long, maxCycles: Int): Snapshot = {
+    val end = start + maxCycles // exclusive
+    var cycle = start
     var done = false
     var last = snap.latest.get
     val timing = sys.env.get("GRAFT_CYCLE_TIMING").contains("1")
-    while (!done && cycle <= maxCycles) {
+    while (!done && cycle < end) {
       val t0 = System.nanoTime()
       val j0 = jobsSoFar()
-      val maxWaves = math.max(1, math.min(config.wavesPerCommit.toLong,
-        maxCycles - cycle + 1).toInt)
+      val maxWaves = math.max(1, math.min(config.wavesPerCommit.toLong, end - cycle).toInt)
       val (s, progressed, pending, waves) = runGroup(cycle, maxWaves)
       if (timing) {
         val jobs = jobsSoFar() - j0
@@ -1114,9 +1144,9 @@ final class CrawlEngine(
     // rebuild the seen estimate (bloom sizing), the next-batch estimate
     // (join-strategy choice), and the per-bucket row estimates (hot-host
     // detection cadence) in one pass over the frontier
-    val perBucket = loadFrontier(snap.latest.get)
+    val perBucket = withStaticPlans(loadFrontier(snap.latest.get)
       .groupBy($"bucket")
-      .agg(count(lit(1)), count(when($"status" === Status.New, 1))).collect()
+      .agg(count(lit(1)), count(when($"status" === Status.New, 1))).collect())
     perBucket.foreach { r =>
       bucketRowEst(r.getInt(0)) = r.getLong(1)
       // suppress an immediate re-scan of buckets whose hosts are already
@@ -1130,20 +1160,7 @@ final class CrawlEngine(
   /** Resume from the latest committed snapshot (exactness: SURVEY §7.2). */
   def resume(maxCycles: Int = 1000): Snapshot = {
     prepareResume()
-    val start = snap.latest.getOrElse(sys.error("nothing to resume")).cycle + 1
-    var cycle = start
-    var done = false
-    var last = snap.latest.get
-    while (!done && cycle <= start + maxCycles) {
-      // group-committing resume: same loop shape as drive()
-      val maxWaves = math.max(1, math.min(config.wavesPerCommit.toLong,
-        start + maxCycles - cycle + 1).toInt)
-      val (s, progressed, pending, waves) = runGroup(cycle, maxWaves)
-      last = s
-      if (progressed == 0 || pending == 0) done = true
-      cycle += waves
-    }
-    last
+    cycles(snap.latest.get.cycle + 1, maxCycles)
   }
 
   // ---- result views ------------------------------------------------------

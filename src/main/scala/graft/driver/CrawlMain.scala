@@ -38,8 +38,6 @@ object CrawlMain {
       .master(s"local[$cores]")
       .appName("graft-crawl")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.sql.codegen.wholeStage",
         sys.env.getOrElse("GRAFT_WSCG", "true"))
       .config("spark.sql.session.timeZone", "UTC")

@@ -138,6 +138,10 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
   /** table -> (bucket -> data dir) for bucketed tables; -1 = unbucketed blob */
   type TableState = Map[String, Map[Int, String]]
 
+  /** The local properties that make up a Spark job group. */
+  private val JobGroupKeys =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
   def latestVersion: Option[Long] = Manifests.latestVersion(rootPath)
 
   def readSnapshot(version: Long): Snapshot = Manifests.read(rootPath, version)
@@ -202,12 +206,26 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
       }
     }
 
+    // the writes run on pool threads, which keep the Spark local properties
+    // they inherited when the pool created them: each write takes on the
+    // caller's job group instead, so commit jobs are attributed (and
+    // cancelled) with the call that committed. Only the job-group keys —
+    // the SQL execution id must stay each write's own.
+    val sc = spark.sparkContext
+    val callerGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
+    def write(label: String)(f: => Unit): Future[Unit] = Future {
+      val poolGroup = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
+      callerGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try timed(label)(f)
+      finally poolGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+
     // all data files of the snapshot are independent — launch every table's
     // write as a concurrent Spark job and wait; the manifest (the only
     // atomicity point) is written strictly after all data lands
     val fullJobs = fullTables.toSeq.map { case (name, df) =>
       val dir = s"$root/data/$name/v$version"
-      (Future { timed(s"full:$name")(df.write.mode("overwrite").parquet(dir)) },
+      (write(s"full:$name")(df.write.mode("overwrite").parquet(dir)),
         () => { tables += name -> Map(-1 -> dir) })
     }
 
@@ -224,15 +242,14 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
         // repartition every task writes a file per bucket it holds
         // (tasks x buckets tiny files — the classic partitioned-write
         // explosion); with it each bucket lands as one file
-        (Future {
-          // explicit partition count: `repartition(col)` alone lets AQE
-          // coalesce the exchange down to a handful of partitions, which
-          // serializes the parquet write; pinning to the changed-bucket
-          // count keeps one write task per bucket (still one file/bucket)
-          timed(s"cow:$name")(df.filter(df(bucketCol).isin(changed.toSeq: _*))
+        // explicit partition count: `repartition(col)` alone lets AQE
+        // coalesce the exchange down to a handful of partitions, which
+        // serializes the parquet write; pinning to the changed-bucket
+        // count keeps one write task per bucket (still one file/bucket)
+        (write(s"cow:$name")(df.filter(df(bucketCol).isin(changed.toSeq: _*))
             .repartition(changed.size, df(bucketCol))
-            .write.mode("overwrite").partitionBy(bucketCol).parquet(cycleDir))
-        }, () => {
+            .write.mode("overwrite").partitionBy(bucketCol).parquet(cycleDir)),
+        () => {
           val prev = tables.getOrElse(name, Map.empty)
           val written: Map[Int, String] = changed.iterator.map { b =>
             b -> s"$cycleDir/$bucketCol=$b"
@@ -244,7 +261,7 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
 
     val appendJobs = appends.toSeq.map { case (name, df) =>
       val dir = s"$root/data/$name/v$version"
-      (Future { timed(s"append:$name")(df.write.mode("overwrite").parquet(dir)) },
+      (write(s"append:$name")(df.write.mode("overwrite").parquet(dir)),
         () => { appended += name -> (appended.getOrElse(name, Nil) :+ dir) })
     }
 

@@ -17,7 +17,6 @@ SPARK_GRAFT_BENCH_ONLY_CRAWL=1 \
 SPARK_GRAFT_BENCH_CORES=$CORES \
 SPARK_GRAFT_BENCH_PAGES=$PAGES \
 SPARK_GRAFT_BENCH_HOSTS=$HOSTS \
-SPARK_GRAFT_AQE=false \
 SPARK_GRAFT_SHUFFLE_PARTS=$CORES \
 GRAFT_CYCLE_TIMING=1 \
 java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} ${EXTRA_JVM:-} \
